@@ -18,12 +18,19 @@ a directory of text files" (SURVEY.md §2.1-2.2):
 - sink: output dir overwritten, results named ``outputfile01..NN``
   (reference: mapreduce/manager/__main__.py:738-761).
 
-Spark mapping: ``rdd.pipe`` is the literal subprocess/stdin/stdout
-analog (one pipe invocation per partition); the group stage is Spark's
-shuffle. Everything the reference's Manager/Worker processes do
+Spark mapping: the contract is byte-level, so both stages hand the OS
+raw bytes. A map task owns a round-robin slice of the input files
+(``num_mappers`` tasks at most) and runs the mapper once per file with
+the opened file as its stdin; its stdout lines are the map output. The
+group stage is Spark's shuffle over those ``bytes`` lines. A reduce
+task writes its sorted lines to the reducer's stdin, and the reducer's
+stdout IS the part file. A nonzero exit fails the task, so Spark's task
+re-execution — the reference manager's dead-worker reassignment, F13 —
+retries it (``session.get_spark`` allows two attempts per task).
+Everything else the reference's Manager/Worker processes do
 operationally — FIFO job queue, dynamic load balancing, heartbeats,
-task re-execution, straggler handling (SURVEY §2.1 F9-F14) — is the
-Spark scheduler and needs no code here.
+straggler handling (SURVEY §2.1 F9-F14) — is the Spark scheduler and
+needs no code here.
 
 Two grouping modes:
 
@@ -35,22 +42,21 @@ Two grouping modes:
   reduce results for key-based reducers (all shipped reference
   workloads), but line→file assignment differs from the golden splits.
 
-Scale posture: no ``collect`` anywhere; the sort is Spark's
-range-partitioned external sort (spill-backed — the analog of the
-reference's heapq k-way merge under its tested 1 MB bound); the
-per-file subprocess framing in the map stage matches the reference
-exactly and parallelizes per file.
+Scale posture: only the (empty) per-partition acknowledgements reach the
+driver; the sort is Spark's range-partitioned external sort
+(spill-backed — the analog of the reference's heapq k-way merge under
+its tested 1 MB bound); executable stdout is streamed, never buffered.
 """
 
 from __future__ import annotations
 
 import os
 import shlex
-import shutil
+import subprocess
 from dataclasses import asdict, dataclass
 from pathlib import Path
 
-from pyspark import RDD, SparkContext
+from pyspark import TaskContext
 from pyspark.rdd import portable_hash
 from pyspark.sql import SparkSession
 
@@ -74,96 +80,26 @@ class JobSpec:
     num_reducers: int = 1
 
 
-def _cmd(executable: str | list[str] | tuple[str, ...]) -> str:
-    """Build the shell command for an executable spec.
-
-    A list/tuple is treated as argv tokens (each quoted); a string is
-    shlex-split first, so ``"grep_map.py apple pie"`` runs the mapper
-    with two arguments. Paths containing spaces must use the list form.
-    """
-    parts = (
-        list(executable)
-        if isinstance(executable, (list, tuple))
-        else shlex.split(str(executable))
-    )
-    return " ".join(shlex.quote(p) for p in parts)
+def _argv(executable: str | list[str] | tuple[str, ...]) -> list[str]:
+    """The argv for an executable spec: a list/tuple is used as given;
+    a string is shlex-split, so ``"grep_map.py apple pie"`` runs the
+    mapper with two arguments. Paths containing spaces must use the
+    list form (or shell quoting)."""
+    if isinstance(executable, (list, tuple)):
+        return list(executable)
+    return shlex.split(str(executable))
 
 
 def round_robin_partition(files: list[str], num_tasks: int) -> list[list[str]]:
     """F2: sorted file *i* → task ``i % num_tasks``.
 
-    (reference: mapreduce/manager/__main__.py:402-423). Metadata-level
-    parity only — task grouping affects scheduling, never results,
-    because each file is piped through its own subprocess regardless.
+    (reference: mapreduce/manager/__main__.py:402-423). ``run_job``
+    gives each list to one map task.
     """
     tasks: list[list[str]] = [[] for _ in range(max(1, num_tasks))]
     for i, f in enumerate(sorted(files)):
         tasks[i % max(1, num_tasks)].append(f)
     return tasks
-
-
-def _make_sort_key():
-    # The reference sorts newline-TERMINATED strings (readlines() then
-    # sort(); heapq.merge of those runs). "a" vs "a\tb" order flips if
-    # compared bare, so the trailing newline is part of the sort key.
-    # Returned as a locally-defined closure so cloudpickle ships it BY
-    # VALUE: a module-level function would be pickled by reference and
-    # executors would need this package importable (it is not, when the
-    # driver runs from outside the repo).
-    def _sort_key(line: str) -> str:
-        return line + "\n"
-
-    return _sort_key
-
-
-def _pipe_per_file(sc: SparkContext, files: list[str], executable: str | list[str]) -> RDD:
-    """Map stage: one subprocess per input file (per-file framing).
-
-    ``sc.textFile(f).coalesce(1).pipe(cmd)`` = read the file, feed its
-    lines to the executable's stdin, one element per stdout line —
-    exactly the reference worker's per-file Popen/communicate loop.
-
-    ``checkCode=True`` so a nonzero exit FAILS the task (instead of
-    silently truncating its output) and Spark's task re-execution —
-    F13, the reference manager's dead-worker reassignment — kicks in.
-    """
-    cmd = _cmd(executable)
-    rdds = [sc.textFile(f, 1).coalesce(1).pipe(cmd, checkCode=True) for f in files]
-    if not rdds:
-        return sc.emptyRDD()
-    return sc.union(rdds)
-
-
-#: Characters Hadoop's path resolution treats specially: textFile's
-#: path string is comma-split into multiple paths, then each is a glob.
-_HADOOP_PATH_SPECIALS = ",{}[]*?"
-
-
-def _safe_input_paths(files: list[str]) -> tuple[list[str], str | None]:
-    """Route file paths containing Hadoop glob/comma metacharacters
-    through temp symlinks with safe names.
-
-    ``sc.textFile("a,b.txt")`` reads two nonexistent paths, and
-    ``log[1].txt`` is a character-class glob — the reference worker
-    opens files directly and handles any name, so parity requires the
-    detour. Returns (paths, tempdir-to-clean or None); the symlinks
-    must outlive the job's action, so the caller cleans up after the
-    sink completes.
-    """
-    import tempfile
-
-    safe: list[str] = []
-    tmpdir: str | None = None
-    for f in files:
-        if any(ch in f for ch in _HADOOP_PATH_SPECIALS):
-            if tmpdir is None:
-                tmpdir = tempfile.mkdtemp(prefix="mr_safe_inputs_")
-            link = os.path.join(tmpdir, f"input{len(safe):05d}")
-            os.symlink(os.path.abspath(f), link)
-            safe.append(link)
-        else:
-            safe.append(f)
-    return safe, tmpdir
 
 
 def run_job(
@@ -179,88 +115,91 @@ def run_job(
     """Run a full map → group → reduce → sink job; returns output paths.
 
     Synchronous (the Spark action IS the job); multi-job queueing,
-    load balancing and fault recovery are the Spark scheduler's.
+    load balancing and fault recovery are the Spark scheduler's. A
+    failed job leaves an existing output directory untouched.
     """
+    # Imported at call time, so wrappers installed on the sources.text
+    # functions (the benchmark's tracing) see every call.
+    from ..sources.text import collect_numbered_outputs, prepare_numbered_sink
+
     sc = spark.sparkContext
     # Skip Hadoop marker/hidden files ('_SUCCESS', '.*.crc') — Hadoop
-    # input formats ignore them, and piping them would corrupt results.
+    # writers leave them next to results, and they are not job input.
     files = sorted(
         str(p)
         for p in Path(input_directory).glob("*")
         if p.is_file() and not p.name.startswith((".", "_"))
     )
-    files, tmpdir = _safe_input_paths(files)
-    try:
-        return _run_job_stages(
-            sc,
-            files,
-            output_directory,
-            mapper_executable,
-            reducer_executable,
-            num_reducers,
-            compat,
-        )
-    finally:
-        # The symlink detour (Hadoop-metachar file names) lives until
-        # the sink's action has consumed every input.
-        if tmpdir is not None:
-            shutil.rmtree(tmpdir, ignore_errors=True)
-
-
-def _run_job_stages(
-    sc: SparkContext,
-    files: list[str],
-    output_directory: str,
-    mapper_executable: str | list[str],
-    reducer_executable: str | list[str],
-    num_reducers: int,
-    compat: bool,
-) -> list[str]:
-    mapped = _pipe_per_file(sc, files, mapper_executable)
-
+    map_argv = _argv(mapper_executable)
+    reduce_argv = _argv(reducer_executable)
     n = max(1, num_reducers)
-    sort_key = _make_sort_key()
+    out, staging = prepare_numbered_sink(output_directory)
+
+    # The closures below are defined here so cloudpickle ships them BY
+    # VALUE: module-level functions would be pickled by reference, and
+    # executors cannot import this package when the driver runs from
+    # outside the repo.
+    def map_files(paths):
+        # F3: the OS feeds each file to the mapper unchanged.
+        for path in paths:
+            with open(path, "rb") as stdin:
+                proc = subprocess.Popen(map_argv, stdin=stdin, stdout=subprocess.PIPE)
+            with proc.stdout:
+                for line in proc.stdout:
+                    yield line.removesuffix(b"\n")
+            if proc.wait():
+                raise RuntimeError(f"mapper {map_argv} exited {proc.returncode} on {path}")
+
+    k = max(1, min(num_mappers, len(files)))
+    mapped = sc.parallelize(round_robin_partition(files, k), k).flatMap(map_files)
+
+    # The reference sorts newline-TERMINATED lines (readlines() then
+    # sort()): "a" vs "a\tb" order flips if compared bare, so the
+    # trailing newline is part of the sort key — and the key is exactly
+    # the bytes the reducer reads.
     if compat:
         # Global dense rank over distinct lines (sorted), then route
         # line -> rank % n. distinct+sortBy+zipWithIndex are all
         # distributed; the join re-attaches ranks to every copy.
-        ranks = mapped.distinct().sortBy(sort_key).zipWithIndex()
+        ranks = mapped.distinct().sortBy(lambda line: line + b"\n").zipWithIndex()
         routed = (
             mapped.map(lambda line: (line, None))
             .join(ranks)
-            .map(lambda kv: ((kv[1][1] % n, kv[0] + "\n"), kv[0]))
+            .map(lambda kv: ((kv[1][1] % n, kv[0] + b"\n"), None))
         )
     else:
         # One-shuffle path: hash the tab-separated key. Sorting by the
         # full line keeps identical keys adjacent (keys contain no tab),
         # which is all a sort-contract reducer (`uniq -c`) needs.
         routed = mapped.map(
-            lambda line: (
-                (portable_hash(line.split("\t", 1)[0]) % n, line + "\n"),
-                line,
-            )
+            lambda line: ((portable_hash(line.split(b"\t", 1)[0]) % n, line + b"\n"), None)
         )
-
     grouped = routed.repartitionAndSortWithinPartitions(
-        numPartitions=n, partitionFunc=lambda k: k[0]
+        numPartitions=n, partitionFunc=lambda key: key[0]
     )
-    sorted_lines = grouped.map(lambda kv: kv[1], preservesPartitioning=True)
 
-    # F7: one reducer subprocess per reduce partition, sorted lines on
-    # stdin — partition i becomes outputfile(i+1).
-    reduced = sorted_lines.pipe(_cmd(reducer_executable), checkCode=True)
+    def reduce_partition(i, records):
+        # F7: one reducer per partition, sorted lines on stdin; its
+        # stdout is this attempt's own file, renamed into place only
+        # after a zero exit, so retried or speculative attempts never
+        # share a file.
+        part = staging / f"part-{i:05d}"
+        tmp = f"{part}.{TaskContext.get().taskAttemptId()}.tmp"
+        with open(tmp, "wb") as stdout:
+            proc = subprocess.Popen(reduce_argv, stdin=subprocess.PIPE, stdout=stdout)
+        try:
+            with proc.stdin:
+                for (_, line), _ in records:
+                    proc.stdin.write(line)
+        except BrokenPipeError:
+            pass  # the reducer stopped reading; its exit status decides
+        if proc.wait():
+            os.unlink(tmp)
+            raise RuntimeError(f"reducer {reduce_argv} exited {proc.returncode}")
+        os.replace(tmp, part)
+        return []
 
-    return _sink_numbered(reduced, output_directory)
-
-
-def _sink_numbered(rdd: RDD, output_directory: str) -> list[str]:
-    """F8 sink: overwrite the output dir; part-i → outputfile(i+1).
-    Shares the prepare/rename sequence with the DataFrame sink
-    (sources/text.py) so the naming semantics can't drift."""
-    from ..sources.text import collect_numbered_outputs, prepare_numbered_sink
-
-    out, staging = prepare_numbered_sink(output_directory)
-    rdd.saveAsTextFile(str(staging))
+    grouped.mapPartitionsWithIndex(reduce_partition).collect()
     return collect_numbered_outputs(out, staging)
 
 

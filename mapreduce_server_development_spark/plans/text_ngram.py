@@ -376,8 +376,8 @@ _XS_L = 32
 #: cover token windows whose union [pa, pa + s + _XS_K - 1] is
 #: contiguous, so every token between them is verbatim-matched and the
 #: intermediate grams can only be missing because the cap excluded
-#: them — the bridge is EXACT (zero false coverage; see
-#: tools/xs_recall.py for the measured recall it restores). Hot
+#: them — the bridge is EXACT (zero false coverage; see BENCH_AB.json
+#: ``xs_hot_gram_recall`` for the measured recall it restores). Hot
 #: inserts longer than 2*_XS_K - 2 tokens still split the span (the
 #: residual recall contract, quantified in SCALE.md).
 _XS_HOT = 64
@@ -524,7 +524,7 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps of <= K between matched positions stay one run, exactly
     recovering spans interrupted by capped grams (hot inserts longer
     than 2K-2 tokens still split: the residual recall contract,
-    measured in SCALE.md / tools/xs_recall.py);
+    measured in SCALE.md / BENCH_AB.json ``xs_hot_gram_recall``);
     spans >= 32 tokens project coverage intervals onto BOTH documents;
     per-doc interval union (the q_dup_ngram_spans window) merges
     overlaps before the per-source mass rollup. Within-doc repeats are

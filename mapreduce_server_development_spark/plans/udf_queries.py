@@ -4,7 +4,7 @@ and scalar ``pandas_udf``.
 The reference's defining feature is "arbitrary program as operator" at
 the map and reduce positions (SURVEY.md §2.1 F3/F7, reference
 mapreduce/worker/__main__.py:144-168). ``operators/mapreduce.py`` keeps
-the literal subprocess contract via ``rdd.pipe``; this module is the
+the literal byte-level subprocess contract; this module is the
 *idiomatic* Spark form of the same extension point:
 
 - ``applyInPandas`` = the reduce contract (a whole group in, arbitrary
@@ -163,7 +163,7 @@ def q_udtf_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window chunking via a Python UDTF (1 -> N rows).
 
     The reference's whole query language is "arbitrary executable as
-    UDTF" (stdin lines -> stdout lines, SURVEY §2.3); ``rdd.pipe``
+    UDTF" (stdin lines -> stdout lines, SURVEY §2.3); ``run_job``
     keeps that literal contract, and this is the idiomatic
     table-function form: a ``@udtf`` class whose ``eval`` yields one
     row per 32-token chunk — the standard corpus-prep step that splits

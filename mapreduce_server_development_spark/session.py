@@ -55,11 +55,14 @@ def get_spark(
       which is the 100 TB posture (no hand-tuned partition counts).
     - shuffle partitions default to the local core count; on a cluster
       AQE coalesces from a higher initial number anyway.
+    - the default local master allows two attempts per task, so a
+      transient executable failure in a MapReduce job is re-executed
+      (the reference manager's dead-worker reassignment).
     """
     cores = _default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
+        .master(master or f"local[{cores},2]")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")

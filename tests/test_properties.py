@@ -206,12 +206,14 @@ def test_global_running_sum_matches_cumsum(spark, vals, nparts):
         max_size=4,
     )
 )
-def test_cmd_quotes_argv_lists_safely(args):
-    """_cmd must quote every argv token so shell metacharacters in
-    arguments (quotes, spaces, $) survive the pipe round-trip."""
+def test_argv_passes_lists_and_splits_strings(args):
+    """_argv hands an argv list (or tuple) to the subprocess unchanged,
+    and shlex-splits a shell-style string, so shell metacharacters in
+    arguments (quotes, spaces, $) survive either form."""
     import shlex
 
-    from mapreduce_server_development_spark.operators.mapreduce import _cmd
+    from mapreduce_server_development_spark.operators.mapreduce import _argv
 
-    rendered = _cmd(args)
-    assert shlex.split(rendered) == args
+    assert _argv(args) == args
+    assert _argv(tuple(args)) == args
+    assert _argv(shlex.join(args)) == args
